@@ -26,6 +26,9 @@ to well under the round-2dp output contract (SURVEY §7 hard-parts note).
 
 from __future__ import annotations
 
+import functools
+import threading
+
 import numpy as np
 
 _F = np.array(
@@ -96,7 +99,8 @@ def _weights(V_max: float, A_max: float, R_t: float):
 
 
 class RiccatiSweep:
-    """Incremental Riccati integration in time-to-go, shared across horizons.
+    """Incremental Riccati integration in time-to-go, shared across horizons,
+    tacklers and plays.
 
     The U1 search solves the SAME pursuit problem over ~30 increasing
     horizons t_f per tackler; S(0) for horizon t_f is simply the Riccati
@@ -104,6 +108,16 @@ class RiccatiSweep:
     cached on the tau-grid) replaces a full re-integration per candidate —
     ~25x less Riccati work with identical step-h numerics. Horizons must be
     multiples of ``h``'s grid (frame times are 0.1 s-aligned; h=0.005).
+
+    The sweep depends only on ``(V_max, A_max, R_t, h)`` — ``grid[n]`` and
+    ``expm(M dt)`` are functions of that key alone — and the position-limit
+    table holds only a handful of distinct (V_max_med, A_max_med) pairs, so
+    the kernel fetches one process-wide sweep per key through ``shared``
+    (a bounded LRU memo) instead of re-integrating per tackler: every
+    tackler and play with the same limits reuses the grid already built.
+    Grid extension is lock-guarded, so concurrent ``S0`` calls on a shared
+    sweep never append the same step twice; reads of an already-built step
+    take no lock.
     """
 
     def __init__(self, V_max: float, A_max: float, R_t: float, h: float = 0.005):
@@ -112,26 +126,40 @@ class RiccatiSweep:
         self.A = A
         self.B_inv = B_inv
         self.GBG = _G @ B_inv @ _G.T
+        # Joint state/costate generator d[z;lam]/dt = M [z;lam].
+        self.M = np.block([[_F, -self.GBG], [-A, -_F.T]])
         self._grid = [S_f.copy()]
+        self._lock = threading.Lock()
         # Propagator cache shared across calls: M is fixed per (V,A,R_t), so
         # expm(M dt) for the uniform 0.1 s frame spacing is computed once.
         self.expm_cache: dict[float, np.ndarray] = {}
+
+    @staticmethod
+    @functools.lru_cache(maxsize=16)
+    def shared(V_max: float, A_max: float, R_t: float, h: float = 0.005) -> RiccatiSweep:
+        """The process-wide sweep for this key (at most 16 kept)."""
+        return RiccatiSweep(V_max, A_max, R_t, h)
 
     def _f(self, S: np.ndarray) -> np.ndarray:
         S = 0.5 * (S + S.T)
         SF = S @ _F
         return SF + SF.T + self.A - S @ self.GBG @ S
 
+    def _extend(self, n: int) -> None:
+        h = self.h
+        with self._lock:
+            while len(self._grid) <= n:
+                S = self._grid[-1]
+                k1 = self._f(S)
+                k2 = self._f(S + 0.5 * h * k1)
+                k3 = self._f(S + 0.5 * h * k2)
+                k4 = self._f(S + h * k3)
+                self._grid.append(S + (h / 6.0) * (k1 + 2 * k2 + 2 * k3 + k4))
+
     def S0(self, t_f: float) -> np.ndarray:
         n = int(round(t_f / self.h))
-        h = self.h
-        while len(self._grid) <= n:
-            S = self._grid[-1]
-            k1 = self._f(S)
-            k2 = self._f(S + 0.5 * h * k1)
-            k3 = self._f(S + 0.5 * h * k2)
-            k4 = self._f(S + h * k3)
-            self._grid.append(S + (h / 6.0) * (k1 + 2 * k2 + 2 * k3 + k4))
+        if len(self._grid) <= n:
+            self._extend(n)
         S = self._grid[n]
         return 0.5 * (S + S.T)
 
@@ -152,27 +180,32 @@ def solve_optimal_path(
     Returns (x, y, u, v, acc_x, acc_y) arrays of len(t), matching the
     reference solver's contract (reference optimal_pursuit.py:55-110).
     Pass a ``RiccatiSweep`` to amortize the backward sweep across repeated
-    calls with growing horizons (the U1 search pattern).
+    calls with growing horizons (the U1 search pattern); the sweep then also
+    supplies the weights, the state/costate matrix and the propagator cache,
+    so it must have been built for the same (V_max, A_max, R_t).
     """
     t = np.asarray(t, dtype=float)
     t_f = float(t[-1])
-    S_f, A, B_inv = _weights(V_max, A_max, R_t)
 
     if sweep is not None:
         S_0 = sweep.S0(t_f)
+        B_inv, M = sweep.B_inv, sweep.M
+        cache = sweep.expm_cache
     else:
+        S_f, A, B_inv = _weights(V_max, A_max, R_t)
         S_0 = _riccati_S0(S_f, A, B_inv, t_f)
+        M = np.block([[_F, -(_G @ B_inv @ _G.T)], [-A, -_F.T]])
+        cache = {}
     z_0 = np.array([x_0, y_0, u_0, v_0])
     lam_0 = S_0 @ z_0
-
-    M = np.block([[_F, -(_G @ B_inv @ _G.T)], [-A, -_F.T]])
 
     out = np.empty((8, len(t)))
     state = np.concatenate([z_0, lam_0])
     out[:, 0] = state
     # Advance exactly with expm over each (possibly non-uniform) interval;
     # cache the propagator since tracking frames are uniformly 0.1 s apart.
-    cache: dict[float, np.ndarray] = sweep.expm_cache if sweep is not None else {}
+    # A shared sweep's cache needs no lock: racing threads store the same
+    # expm(M dt) under the same key.
     for k in range(1, len(t)):
         dt = round(float(t[k] - t[k - 1]), 9)
         E = cache.get(dt)

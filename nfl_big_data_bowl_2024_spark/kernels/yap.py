@@ -307,8 +307,9 @@ def _search_tackler(limits, g, x_c, y_c, t, time_0, idx_start, play_direction):
         x0, y0 = x_t[idx_start], y_t[idx_start]
         u0, v0 = u_t[idx_start], w_t[idx_start]
         v_med, v_max, a_med, a_max = limits
-        # One shared Riccati sweep serves every candidate horizon.
-        sweep = RiccatiSweep(v_med, a_med, R_T)
+        # The process-wide sweep for these limits serves every candidate
+        # horizon of every tackler and play that shares them.
+        sweep = RiccatiSweep.shared(v_med, a_med, R_T)
 
         for idx_j in range(idx_start + 1, len(t) - 1):
             time_j = t[idx_start : idx_j + 1] - time_0

@@ -153,6 +153,10 @@ def _cc_union_find_local(spark, e: DataFrame) -> DataFrame:
         return r
 
     for a, b in zip(srcs, dsts):
+        if a is None or b is None:
+            # The distributed path's label exchange is an equi-join, so a
+            # NULL endpoint links nothing: drop the edge from the union.
+            continue
         ra, rb = find(a), find(b)
         if ra == rb:
             continue
@@ -161,7 +165,11 @@ def _cc_union_find_local(spark, e: DataFrame) -> DataFrame:
         parent[rb] = ra  # larger root under smaller: root stays the MIN
     nodes = set(srcs)
     nodes.update(dsts)
-    rows = sorted((n, find(n)) for n in nodes)
+    # As in the distributed path, a NULL endpoint still surfaces as one
+    # (NULL, NULL) node row, and the edge's other endpoint as a node.
+    null_node = [(None, None)] if None in nodes else []
+    nodes.discard(None)
+    rows = sorted((n, find(n)) for n in nodes) + null_node
     ftype = e.schema["src"].dataType
     schema = T.StructType(
         [

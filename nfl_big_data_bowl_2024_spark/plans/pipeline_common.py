@@ -476,7 +476,8 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_t").alias("n_t"),
         F.count(F.lit(1)).alias("v"),
     )
-    n_r, n_t, v = int(lm_m["n_r"]), int(lm_m["n_t"]), int(lm_m["v"])
+    # sum() over an empty corpus observes as NULL: treat it as 0.
+    n_r, n_t, v = int(lm_m["n_r"] or 0), int(lm_m["n_t"] or 0), int(lm_m["v"])
     ratio = cp.select(
         "term",
         F.floor(

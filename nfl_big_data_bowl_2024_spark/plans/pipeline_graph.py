@@ -1239,9 +1239,10 @@ def graph_copurchase_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossover is exactly where lineitem stops broadcasting, so the gate
     # keys on the same signal the planner does (input tree bytes vs the
     # session's 64 MB autoBroadcastJoinThreshold, conservatively halved
-    # for parquet-to-in-memory expansion).
+    # for parquet-to-in-memory expansion). An unknown size (0: path missing
+    # or not on the local filesystem) takes the scale-safe collect_set arm.
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    if _table_tree_bytes(sf_dir, "lineitem") <= 32 * 1024 * 1024:
+    if 0 < _table_tree_bytes(sf_dir, "lineitem") <= 32 * 1024 * 1024:
         lid = li.distinct()
         a = lid.select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")

@@ -60,10 +60,6 @@ def read_csv_with_corrupt_capture(
     return clean, corrupt
 
 
-def read_parquet_table(spark: SparkSession, name: str, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-testdata parquet table, normalizing timestamp physics.
 

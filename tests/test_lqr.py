@@ -105,3 +105,55 @@ def test_sweep_path_matches_fresh_path():
     b = solve_optimal_path(-5.0, 0.0, 4.0, 0.0, t, 5.6, 4.2, 1.0)
     for ax, bx in zip(a, b):
         assert np.allclose(ax, bx, atol=1e-9)
+
+
+def test_shared_sweep_out_of_order_matches_fresh():
+    """A shared sweep extended long-horizon-first, then short, with two keys
+    interleaved, returns exactly what a fresh sweep returns."""
+    from nfl_big_data_bowl_2024_spark.kernels.lqr import RiccatiSweep
+
+    RiccatiSweep.shared.cache_clear()
+    keys = [(5.6, 4.2, 1.0), (3.2, 2.4, 1.0)]
+    for t_f in (3.0, 0.5, 2.2, 0.1, 3.4):
+        for key in keys:
+            got = RiccatiSweep.shared(*key).S0(t_f)
+            assert np.array_equal(got, RiccatiSweep(*key).S0(t_f)), (key, t_f)
+    assert RiccatiSweep.shared(*keys[0]) is RiccatiSweep.shared(*keys[0])
+    assert RiccatiSweep.shared.cache_info().currsize == 2
+
+
+def test_shared_sweep_concurrent_extension():
+    """Threads extending the same shared sweeps concurrently never append a
+    step twice or out of order, and the memo stays within its bound."""
+    import random
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from nfl_big_data_bowl_2024_spark.kernels.lqr import RiccatiSweep
+
+    RiccatiSweep.shared.cache_clear()
+    keys = [(5.6, 4.2, 1.0), (5.0, 3.9, 1.0), (3.7, 2.8, 1.0), (3.2, 2.4, 1.0)]
+    rng = random.Random(7)
+    jobs = [(key, round(rng.uniform(0.1, 3.0), 1)) for _ in range(16) for key in keys]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(lambda k, t: RiccatiSweep.shared(*k).S0(t), k, t) for k, t in jobs]
+            got = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    for (key, t_f), S in zip(jobs, got):
+        assert np.array_equal(S, RiccatiSweep(*key).S0(t_f)), (key, t_f)
+    for key in keys:
+        sweep = RiccatiSweep.shared(*key)
+        n_max = max(int(round(t / sweep.h)) for k, t in jobs if k == key)
+        fresh = RiccatiSweep(*key)
+        fresh.S0(n_max * sweep.h)
+        assert len(sweep._grid) == n_max + 1
+        assert all(np.array_equal(a, b) for a, b in zip(sweep._grid, fresh._grid))
+
+    bound = RiccatiSweep.shared.cache_info().maxsize
+    for i in range(bound + 4):
+        RiccatiSweep.shared(4.0 + 0.1 * i, 3.0, 1.0)
+    assert RiccatiSweep.shared.cache_info().currsize <= bound

@@ -72,6 +72,20 @@ def test_copurchase_large_scale_picks_one_scan_expansion(spark, monkeypatch):
     assert plan.count("Scan parquet") <= 2  # tree + details sections
 
 
+def test_copurchase_unknown_size_picks_one_scan_expansion(spark, monkeypatch):
+    # A size the gate cannot measure (0: path missing or not on the local
+    # filesystem) must fail toward the scale-safe collect_set arm, not the
+    # broadcast self-join.
+    import nfl_big_data_bowl_2024_spark.plans.pipeline_graph as pg
+
+    monkeypatch.setattr(pg, "_table_tree_bytes", lambda sf_dir, name: 0)
+    plan = _fmt_plan(
+        _registry()["graph_copurchase_projection"].fn(spark, SF01)
+    )
+    assert "collect_set" in plan
+    assert "Join" not in plan
+
+
 def test_fixture_local_df_exact_and_jvm_local(spark):
     # r14: fixture relations are Arrow-built LocalTableScans (pure JVM at
     # evaluation time) instead of pickled-RDD ExistingRDD scans. The values
@@ -258,3 +272,31 @@ def test_cc_driver_local_matches_distributed(spark, monkeypatch):
     small = spark.createDataFrame([(1, 2)], "src int, dst int")
     out = G.connected_components(small)
     assert dict(out.dtypes) == {"node": "int", "component": "int"}
+
+
+def test_cc_driver_local_null_endpoints_match_distributed(spark, monkeypatch):
+    """A NULL endpoint links nothing on either path (the distributed label
+    exchange is an equi-join): the driver-local union-find must not raise
+    on it and must return the distributed path's rows exactly."""
+    import nfl_big_data_bowl_2024_spark.operators.graph as G
+
+    edges = [(1, 2), (2, None), (None, 3), (4, None), (5, 6), (None, None),
+             (6, 7), (3, 8)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    local = sorted((tuple(r) for r in G.connected_components(df).collect()), key=str)
+    monkeypatch.setattr(G, "_DRIVER_CC_EDGE_ROWS", -1)
+    dist = sorted((tuple(r) for r in G.connected_components(df).collect()), key=str)
+    assert local == dist
+    assert (4, 4) in local and (8, 3) in local and (None, None) in local
+
+
+def test_dsir_empty_corpus_returns_no_rows(spark, tmp_path):
+    """Over an empty documents table the LM totals observe as NULL sums;
+    both DSIR queries must build and return zero rows, not raise."""
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(os.path.join(SF01, "documents.parquet"))
+    pq.write_table(schema.empty_table(), str(tmp_path / "documents.parquet"))
+    reg = _registry()
+    for name in ("doc_dsir_importance", "doc_dsir_select"):
+        assert reg[name].fn(spark, str(tmp_path)).collect() == [], name

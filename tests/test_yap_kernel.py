@@ -9,19 +9,20 @@ import pandas as pd
 import pytest
 
 from nfl_big_data_bowl_2024_spark import fixtures, schemas
+from nfl_big_data_bowl_2024_spark.kernels.lqr import RiccatiSweep
 from nfl_big_data_bowl_2024_spark.kernels.yap import yap_play_kernel
 
 LIMITS = {p: lims for p, *lims in schemas.POSITION_LIMITS}
 
 
-def _group(game: int, play: int) -> pd.DataFrame:
-    """Assemble one (gameId, playId) kernel input group from the fixtures,
-    replicating the joins in plans.domain.yap_plan with plain pandas."""
-    tr = pd.DataFrame(fixtures.tracking_rows(), columns=fixtures.TRACKING_COLS)
+def _kernel_input(tr, players, plays, tackles, game: int, play: int) -> pd.DataFrame:
+    """Assemble one (gameId, playId) kernel input group from tracking rows
+    and dimension rows, replicating the joins in plans.domain.yap_plan with
+    plain pandas."""
     g = tr[(tr.gameId == game) & (tr.playId == play)].copy()
-    players = {n: (nm, pos) for n, nm, pos in fixtures.PLAYERS}
-    plays = {(gm, pl): (bc, d) for gm, pl, bc, d in fixtures.PLAYS}
-    tacklers = {n for gm, pl, n in fixtures.TACKLES if (gm, pl) == (game, play)}
+    players = {n: (nm, pos) for n, nm, pos in players}
+    plays = {(gm, pl): (bc, d) for gm, pl, bc, d in plays}
+    tacklers = {n for gm, pl, n in tackles if (gm, pl) == (game, play)}
     bc, _ = plays[(game, play)]
     g["ballCarrierId"] = bc
     g["is_tackler"] = g.nflId.isin(tacklers)
@@ -30,6 +31,14 @@ def _group(game: int, play: int) -> pd.DataFrame:
     for i, col in enumerate(["V_max_med", "V_max_max", "A_max_med", "A_max_max"]):
         g[col] = g.position.map(lambda p: LIMITS.get(p, [None] * 4)[i])
     return g
+
+
+def _group(game: int, play: int) -> pd.DataFrame:
+    """One kernel input group from the FIXTURES.md §A scenarios."""
+    tr = pd.DataFrame(fixtures.tracking_rows(), columns=fixtures.TRACKING_COLS)
+    return _kernel_input(
+        tr, fixtures.PLAYERS, fixtures.PLAYS, fixtures.TACKLES, game, play
+    )
 
 
 def _run(game: int, play: int) -> pd.DataFrame:
@@ -46,6 +55,37 @@ def test_straight_line_yap_golden():
     # Feasibility bounds honored (CB limits).
     assert row["max_vel_opt"] <= 10.9
     assert row["max_accel_opt"] <= 9.1
+
+
+def _season_groups() -> list[pd.DataFrame]:
+    """Kernel inputs for every fixture scenario plus a synthetic season of
+    84 plays: every residue of the p % 4/5/6/7 geometry cycle, every
+    tackler position of the synthetic roster, both play directions."""
+    groups = [_group(g, p) for g, p, _, _ in fixtures.PLAYS]
+    for p in range(84):
+        players, play, tackles = fixtures._synthetic_play_meta(p)
+        tr = pd.DataFrame(
+            fixtures._synthetic_play_tracking(p), columns=fixtures.TRACKING_COLS
+        )
+        groups.append(_kernel_input(tr, players, [play], tackles, play[0], play[1]))
+    return groups
+
+
+def test_shared_sweep_kernel_bit_identical_to_fresh_sweeps(monkeypatch):
+    """The kernel's process-wide Riccati sweep (one per limit pair, shared
+    across tacklers and plays, extended out of order as horizons vary) must
+    give exactly the rows a fresh per-tackler sweep gives."""
+    groups = _season_groups()
+    RiccatiSweep.shared.cache_clear()
+    shared = [yap_play_kernel(g) for g in groups]
+    assert RiccatiSweep.shared.cache_info().currsize == 4  # distinct limit pairs
+    assert sum(int(r["YAP"].notna().sum()) for r in shared) > 84  # searches ran
+
+    monkeypatch.setattr(RiccatiSweep, "shared", staticmethod(RiccatiSweep))
+    fresh = [yap_play_kernel(g) for g in groups]
+    assert len(shared) == len(fresh)
+    for i, (a, b) in enumerate(zip(shared, fresh)):
+        assert a.equals(b), i
 
 
 def test_left_play_mirror_same_yap():
