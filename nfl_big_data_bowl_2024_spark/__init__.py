@@ -7,10 +7,11 @@ Layout:
     fixtures   -- deterministic NFL-domain fixtures (FIXTURES.md §A)
     sources    -- readers (parquet/csv, partitioned tracking) and sinks
     functions  -- scalar column function families (spatial F1-F3)
-    operators  -- window/ordered ops (W1-W5), dedup, similarity search
+    operators  -- event-window/crossing ops (W1-W2), dedup, similarity, graph
     kernels    -- numpy LQR pursuit solver (U2) + the U1 YAP applyInPandas kernel
-    plans      -- registered queries: relational (§2.1-2.7), pipeline_ops
-                  (dedup/similarity/text), domain (E1/E2), reporting (E3)
+    plans      -- registered queries: relational (§2.1-2.7), pipeline_*
+                  families (dedup/similarity/text/...), domain (E1/E2),
+                  reporting (E3)
 """
 
 __version__ = "0.1.0"

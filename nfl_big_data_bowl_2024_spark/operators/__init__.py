@@ -1,15 +1,1 @@
-from .windows import (
-    bounded_group_max,
-    event_window,
-    first_crossing,
-    offset_from_first,
-    ordered_slice,
-)
-
-__all__ = [
-    "event_window",
-    "first_crossing",
-    "offset_from_first",
-    "ordered_slice",
-    "bounded_group_max",
-]
+"""Set-at-a-time DataFrame operators shared by the registered plans."""

@@ -1,14 +1,21 @@
-"""Ordered-sequence operators (SURVEY §2.5 W1-W5).
+"""Ordered-sequence operators (SURVEY §2.5 W1-W2).
 
 These are the heart of the reference: everything it does per play is "find an
 event-bounded frame window, find the first threshold crossing inside it,
 aggregate over the bounded slice". The reference implements them with
 positional numpy index arithmetic inside a per-play Python loop
-(reference optimal_pursuit.py:112-121,222-236); here each is a set-at-a-time
-DataFrame transform — one shuffle per groupBy, Catalyst-planned, no Python in
-the hot path — that processes EVERY group in one pass.
+(reference optimal_pursuit.py:112-121,222-236); here each is a window
+expression over an unbounded group window, so every group is processed in
+one pass with no Python in the hot path.
 
-All functions are generic over (group_cols, order_col) so they serve both the
+Both are WINDOW EXPRESSIONS attached to every row of the group rather than
+aggregates joined back: the aggregate+join-back composition evaluates the
+source subtree once PER CONSUMER (Catalyst does not CSE DataFrame subtrees),
+while stacked window expressions over one partitioning keep it to a single
+scan and a single exchange. The bounded max (A1) is then a filter on
+[start, crossing) plus a groupBy, or a conditional aggregate, in the caller.
+
+Both are generic over the group window and ``order_col``, so they serve the
 NFL tracking table (group=(gameId,playId[,nflId]), order=frameId) and any
 ordered log like the testdata ``events`` table (group=user_id, order=ts).
 """
@@ -17,171 +24,55 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def event_window(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    event_col: str,
-    start_events: Sequence[str],
-    stop_events: Sequence[str],
-    fallback_start_event: str | None = None,
-) -> DataFrame:
-    """W1 — per-group event-window detection (reference identify_events,
-    optimal_pursuit.py:112-121).
-
-    start = first ``order_col`` whose event is in ``start_events``, else first
-    ``fallback_start_event``; stop = first ``order_col`` whose event is in
-    ``stop_events``. Returns one row per group: group_cols + (start_ord,
-    stop_ord). Groups with no stop event get stop_ord NULL (the reference
-    raises there; callers turn NULL into an error-status row).
-
-    Single hash aggregate with conditional MIN — map-side partial aggregation
-    collapses each partition to <=1 row per group before the shuffle, so this
-    scales linearly in input size and the shuffle is tiny (one row per group).
-    """
-    start_primary = F.min(F.when(F.col(event_col).isin(list(start_events)), F.col(order_col)))
-    stop_agg = F.min(F.when(F.col(event_col).isin(list(stop_events)), F.col(order_col))).alias("stop_ord")
-    if fallback_start_event is not None:
-        start_fallback = F.min(F.when(F.col(event_col) == fallback_start_event, F.col(order_col)))
-        start_agg = F.coalesce(start_primary, start_fallback).alias("start_ord")
-    else:
-        start_agg = start_primary.alias("start_ord")
-    return df.groupBy(*group_cols).agg(start_agg, stop_agg)
-
-
-def first_crossing(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    condition: Column,
-    after: Column | str,
-    strict: bool = True,
-) -> DataFrame:
-    """W2 — first ``order_col`` per group where ``condition`` holds and the
-    order value is after ``after`` (reference optimal_pursuit.py:222-226:
-    first frame with delta_dist < R_t strictly after the start frame).
-
-    ``after`` may be a column already joined onto ``df`` (e.g. start_ord from
-    event_window). Returns group_cols + crossing_ord (NULL = never crosses,
-    the reference's NaN branch).
-    """
-    after_col = F.col(after) if isinstance(after, str) else after
-    cmp = F.col(order_col) > after_col if strict else F.col(order_col) >= after_col
-    return df.groupBy(*group_cols).agg(
-        F.min(F.when(condition & cmp, F.col(order_col))).alias("crossing_ord")
-    )
+from pyspark.sql.window import WindowSpec
 
 
 def event_window_exprs(
-    w: "Window",
+    w: WindowSpec,
     order_col: str,
-    event_col: str,
+    event_col: Column | str,
     start_events: Sequence[str],
     stop_events: Sequence[str],
     fallback_start_event: str | None = None,
 ) -> tuple[Column, Column]:
-    """W1 as WINDOW EXPRESSIONS over an unbounded group window: (start_ord,
-    stop_ord) attached to every row of the group instead of one row per
-    group. Identical semantics to :func:`event_window`; use this form when
-    the same frame then feeds further per-row logic (crossing detection,
-    bounded aggregation) — the aggregate+join-back composition evaluates the
-    source subtree once PER CONSUMER (Catalyst does not CSE DataFrame
-    subtrees), while stacked window expressions over one partitioning keep
-    it to a single scan and a single exchange.
+    """W1 — (start_ord, stop_ord) of the group, on every row (reference
+    identify_events, optimal_pursuit.py:112-121).
+
+    start = first ``order_col`` whose event is in ``start_events``, else first
+    ``fallback_start_event``; stop = first ``order_col`` whose event is in
+    ``stop_events``. A group with no such event gets NULL (the reference
+    raises there; callers turn NULL into an error-status row). ``event_col``
+    may be a Column, e.g. the event masked to NULL on rows that must not
+    set the window.
     """
+    event = F.col(event_col) if isinstance(event_col, str) else event_col
     start_primary = F.min(
-        F.when(F.col(event_col).isin(list(start_events)), F.col(order_col))
+        F.when(event.isin(list(start_events)), F.col(order_col))
     ).over(w)
     stop_ord = F.min(
-        F.when(F.col(event_col).isin(list(stop_events)), F.col(order_col))
+        F.when(event.isin(list(stop_events)), F.col(order_col))
     ).over(w)
     if fallback_start_event is not None:
         start_fallback = F.min(
-            F.when(F.col(event_col) == fallback_start_event, F.col(order_col))
+            F.when(event == fallback_start_event, F.col(order_col))
         ).over(w)
         return F.coalesce(start_primary, start_fallback), stop_ord
     return start_primary, stop_ord
 
 
 def first_crossing_expr(
-    w: "Window",
+    w: WindowSpec,
     order_col: str,
     condition: Column,
     after: Column,
     strict: bool = True,
 ) -> Column:
-    """W2 as a WINDOW EXPRESSION (see :func:`event_window_exprs` for when to
-    prefer this over the aggregate+join form)."""
+    """W2 — first ``order_col`` of the group where ``condition`` holds and
+    the order value is after ``after``, on every row (reference
+    optimal_pursuit.py:222-226: first frame with delta_dist < R_t strictly
+    after the start frame). NULL = never crosses, the reference's NaN
+    branch."""
     cmp = F.col(order_col) > after if strict else F.col(order_col) >= after
     return F.min(F.when(condition & cmp, F.col(order_col))).over(w)
-
-
-def offset_from_first(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    out_col: str = "elapsed",
-) -> DataFrame:
-    """W3 — value minus the group's first value in order (reference
-    ``time = time - time[0]``, optimal_pursuit.py:290-291,446-447; the
-    reference's ``datetime.now()`` origin cancels in the subtraction and is
-    dropped here for determinism).
-
-    Window FIRST over (group, order). No extra shuffle when the input is
-    already hash-partitioned by the group key (e.g. after a groupBy-adjacent
-    stage); otherwise one shuffle on group_cols shared by any subsequent
-    window over the same key.
-    """
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_col, F.col(value_col) - F.first(value_col).over(w))
-
-
-def ordered_slice(
-    df: DataFrame,
-    order_col: str,
-    lo: Column | str,
-    hi: Column | str,
-    include_hi: bool = False,
-) -> DataFrame:
-    """W4 — frame-range selection ``V[lo:hi]`` (reference
-    optimal_pursuit.py:229-230). Python-slice semantics by default: lo
-    inclusive, hi exclusive. ``lo``/``hi`` are columns already present on the
-    row (typically joined from event_window/first_crossing results)."""
-    lo_col = F.col(lo) if isinstance(lo, str) else lo
-    hi_col = F.col(hi) if isinstance(hi, str) else hi
-    upper = F.col(order_col) <= hi_col if include_hi else F.col(order_col) < hi_col
-    return df.filter((F.col(order_col) >= lo_col) & upper)
-
-
-def bounded_group_max(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    lo: Column | str,
-    hi: Column | str,
-    agg_cols: dict[str, str],
-    include_hi: bool = False,
-) -> DataFrame:
-    """A1 — grouped max over an event-bounded slice (reference
-    optimal_pursuit.py:229-236: max speed/accel per (play, tackler) between
-    ball-delivery and first vicinity frame; slice is [start, crossing) ).
-
-    ``agg_cols`` maps input column -> output alias. Rows where lo or hi is
-    NULL aggregate to NULL (reference NaN-when-never-in-vicinity semantics)
-    because the filter drops all their frames but callers keep the group via
-    a left join back onto the group spine.
-    """
-    sliced = ordered_slice(df, order_col, lo, hi, include_hi=include_hi)
-    return sliced.groupBy(*group_cols).agg(
-        *[F.max(src).alias(dst) for src, dst in agg_cols.items()]
-    )

@@ -32,7 +32,7 @@ from ..kernels.yap import (
     max_params_play_kernel,
     yap_play_kernel,
 )
-from ..operators.windows import event_window, first_crossing
+from ..operators.windows import event_window_exprs, first_crossing_expr
 from .registry import register
 
 _PLAY_KEY = ["gameId", "playId"]
@@ -63,8 +63,9 @@ def max_params_plan(
       - carrier coordinates attached per frame via a (game, play, frame)
         window (replaces the carrier_xy self-join),
       - start/stop_ord via (game, play) window MINs over carrier rows
-        (event_window semantics, W1),
-      - crossing_ord via the (game, play, nflId) window (W2),
+        (event_window_exprs, W1),
+      - crossing_ord via the (game, play, nflId) window
+        (first_crossing_expr, W2),
       - the bounded maxima as conditional aggregates in the terminal
         groupBy (A1) — which reuses the same clustering, so no further
         exchange.
@@ -121,18 +122,15 @@ def _max_params_per_player(
         F.broadcast(plays.select(*_PLAY_KEY, "ballCarrierId")), _PLAY_KEY
     )
     is_carrier = F.col("nflId") == F.col("ballCarrierId")
-    start_primary = F.min(
-        F.when(
-            is_carrier & F.col("event").isin(list(schemas.START_EVENTS)),
-            F.col("frameId"),
-        )
-    ).over(w_play)
-    start_fallback = F.min(
-        F.when(
-            is_carrier & (F.col("event") == schemas.FALLBACK_START_EVENT),
-            F.col("frameId"),
-        )
-    ).over(w_play)
+    # only the carrier's events bound the play's window
+    start_ord, stop_ord = event_window_exprs(
+        w_play,
+        "frameId",
+        F.when(is_carrier, F.col("event")),
+        start_events=schemas.START_EVENTS,
+        stop_events=schemas.STOP_EVENTS,
+        fallback_start_event=schemas.FALLBACK_START_EVENT,
+    )
     t = (
         t.withColumn("cx", F.max(F.when(is_carrier, F.col("x"))).over(w_frame))
         .withColumn("cy", F.max(F.when(is_carrier, F.col("y"))).over(w_frame))
@@ -142,27 +140,16 @@ def _max_params_per_player(
         .withColumn(
             "has_c", F.count(F.when(is_carrier, F.lit(1))).over(w_frame) > 0
         )
-        .withColumn("start_ord", F.coalesce(start_primary, start_fallback))
-        .withColumn(
-            "stop_ord",
-            F.min(
-                F.when(
-                    is_carrier & F.col("event").isin(list(schemas.STOP_EVENTS)),
-                    F.col("frameId"),
-                )
-            ).over(w_play),
-        )
+        .withColumn("start_ord", start_ord)
+        .withColumn("stop_ord", stop_ord)
     )
     dx = F.col("cx") - F.col("x")
     dy = F.col("cy") - F.col("y")
     t = t.withColumn("dist", F.sqrt(dx * dx + dy * dy)).withColumn(
         "crossing_ord",
-        F.min(
-            F.when(
-                (F.col("dist") < r_t) & (F.col("frameId") > F.col("start_ord")),
-                F.col("frameId"),
-            )
-        ).over(w_tackler),
+        first_crossing_expr(
+            w_tackler, "frameId", F.col("dist") < r_t, F.col("start_ord")
+        ),
     )
     in_slice = (
         F.col("has_c")

@@ -1,5 +1,5 @@
 """Shared helpers, oracle-SQL fragments and constants for the
-pipeline_* family modules (split out of pipeline_ops.py, round 9).
+pipeline_* family modules (round-9 family split).
 Every definition moved verbatim; see the family modules for the
 registered queries that use them."""
 

@@ -1,8 +1,7 @@
 """Graph and spatial queries (graph_*, spatial_*): PageRank/HITS, label propagation, k-core, reachability, proximity pairs.
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments). Original
+Split along the registry's family seams in round 9; shared
+helpers and oracle fragments live in pipeline_common.py. Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """
 
@@ -603,7 +602,7 @@ def graph_adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ORDER BY aa_micro DESC, k`` equals the oracle's
     ``ORDER BY aa_micro DESC, node_a, node_b`` and the top-25 tie-break
     stays exact; unpack is shiftright / mod after the limit. Measured
-    (scripts/ab_adamic_packed.py, committed record in PERF.md): 22-26%
+    (PERF.md, "graph_adamic_adar_links: packed-key wedge A/B"): 22-26%
     faster at the generated sf1.0 (B 7.8/8.9 s vs A 10.0/12.5 s,
     probes flat, outputs hash-identical); real TPC-H ids keep the gate
     open to ~sf1000 (custkey*2 < 2^31). The generated sf10 tree's

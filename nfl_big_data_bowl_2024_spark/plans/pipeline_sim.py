@@ -1,8 +1,7 @@
 """Dedup, similarity, embedding and multimodal queries (dedup_*, sim_*, emb_*, mm_*, pipeline_*, arr_*, json_*).
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments); the ml_*
+Split along the registry's family seams in round 9; shared
+helpers and oracle fragments live in pipeline_common.py. The ml_*
 family moved on to pipeline_ml.py in round 10. Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """

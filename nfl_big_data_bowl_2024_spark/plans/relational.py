@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.windows import event_window, first_crossing
+from ..operators.windows import event_window_exprs, first_crossing_expr
 from ..sources.readers import read_testdata_table as _t
 from ..localrel import local_df as _local
 from .registry import register
@@ -116,8 +116,6 @@ WHERE b.n_window >= 2
     "scans events once with one exchange.",
 )
 def flagship_bounded_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.windows import event_window_exprs, first_crossing_expr
-
     events = _t(spark, sf_dir, "events")
     customer = _t(spark, sf_dir, "customer")
 

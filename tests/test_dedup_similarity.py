@@ -161,7 +161,7 @@ def test_winnow_fingerprint_matches_python_model(spark):
     short-document (< k chars) edge case."""
     import hashlib
 
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import txt_winnow_fingerprint
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_txt import txt_winnow_fingerprint
 
     texts = {
         1: "the quick brown fox jumps over the lazy dog",
@@ -222,10 +222,12 @@ def test_cluster_lsh_composition_matches_exact_audit_twin(spark):
     scale; the same equality was measured at sf0.1: 256 pairs / 477
     labels on both sides)."""
     from nfl_big_data_bowl_2024_spark.operators.graph import connected_components
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_common import (
         _cluster_pairs_lsh,
-        _t,
         cluster_pairs_exact,
+    )
+    from nfl_big_data_bowl_2024_spark.sources.readers import (
+        read_testdata_table as _t,
     )
 
     d = _t(spark, "/root/testdata/sf0.01", "documents")
@@ -391,7 +393,7 @@ def test_fuzzy_blocked_levenshtein_adversarial_fixture(spark):
     import os
     import tempfile
 
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_txt import (
         txt_fuzzy_blocked_levenshtein,
     )
 
@@ -631,7 +633,7 @@ def test_sorted_neighborhood_partitioning_invariant(spark):
 def test_hard_negatives_match_numpy(spark, embeddings):
     """sim_hard_negatives top-1 == a numpy argmax over rounded cosines with
     the same (cosine desc, vec_id asc) tie order."""
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_sim import (
         sim_hard_negatives,
     )
 

@@ -1,16 +1,16 @@
-"""Property tests (hypothesis): the W1/W2/A1 operator stack agrees with a
-pure-Python reference model on arbitrary ordered event logs."""
+"""Property tests (hypothesis): the W1/W2/A1 window-expression stack agrees
+with a pure-Python reference model on arbitrary ordered event logs."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from nfl_big_data_bowl_2024_spark.operators.windows import (
-    bounded_group_max,
-    event_window,
-    first_crossing,
+    event_window_exprs,
+    first_crossing_expr,
 )
 
 EVENTS = [None, "start", "go", "stop", "noise"]
@@ -59,25 +59,32 @@ def test_window_stack_matches_python_model(spark, rows):
     )
     expect = _model(rows)
 
-    win = event_window(
-        df, ["grp"], "ord", "event",
+    w = Window.partitionBy("grp")
+    start_c, stop_c = event_window_exprs(
+        w, "ord", "event",
         start_events=["start"], stop_events=["stop"], fallback_start_event="go",
     )
-    got_win = {r["grp"]: (r["start_ord"], r["stop_ord"]) for r in win.collect()}
-    for g, (s, p, _, _) in expect.items():
-        assert got_win[g] == (s, p), f"window mismatch for group {g}"
-
-    joined = df.join(win, "grp")
-    crossing = first_crossing(
-        joined, ["grp"], "ord", F.col("value") > 10, F.col("start_ord")
+    ev_w = df.select(
+        "*", start_c.alias("start_ord"), stop_c.alias("stop_ord")
+    ).withColumn(
+        "crossing_ord",
+        first_crossing_expr(w, "ord", F.col("value") > 10, F.col("start_ord")),
     )
-    got_cross = {r["grp"]: r["crossing_ord"] for r in crossing.collect()}
-    for g, (_, _, c, _) in expect.items():
-        assert got_cross.get(g) == c, f"crossing mismatch for group {g}"
+    rows_w = (
+        ev_w.select("grp", "start_ord", "stop_ord", "crossing_ord").distinct().collect()
+    )
+    assert len(rows_w) == len(expect), "window columns differ within a group"
+    got = {r["grp"]: (r["start_ord"], r["stop_ord"], r["crossing_ord"]) for r in rows_w}
+    for g, (s, p, c, _) in expect.items():
+        assert got[g] == (s, p, c), f"window/crossing mismatch for group {g}"
 
-    bounded = bounded_group_max(
-        joined.join(crossing, "grp"),
-        ["grp"], "ord", "start_ord", "crossing_ord", {"value": "max_val"},
+    # A1 the way flagship_bounded_max computes it: filter [start, crossing)
+    bounded = (
+        ev_w.filter(
+            (F.col("ord") >= F.col("start_ord")) & (F.col("ord") < F.col("crossing_ord"))
+        )
+        .groupBy("grp")
+        .agg(F.max("value").alias("max_val"))
     )
     got_max = {r["grp"]: r["max_val"] for r in bounded.collect()}
     for g, (_, _, _, m) in expect.items():

@@ -1,15 +1,13 @@
-"""Unit tests for the ordered-sequence operators (SURVEY §2.5 W1-W4/A1)."""
+"""Unit tests for the ordered-sequence operators (SURVEY §2.5 W1-W2/A1)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from nfl_big_data_bowl_2024_spark.operators.windows import (
-    bounded_group_max,
-    event_window,
-    first_crossing,
-    offset_from_first,
-    ordered_slice,
+    event_window_exprs,
+    first_crossing_expr,
 )
 
 ROWS = [
@@ -31,60 +29,45 @@ def _df(spark):
     return spark.createDataFrame(ROWS, "grp string, ord int, event string, val double")
 
 
-def test_event_window_with_fallback(spark):
-    win = event_window(
-        _df(spark), ["grp"], "ord", "event",
-        start_events=["handoff"], stop_events=["tackle"],
-        fallback_start_event="ball_snap",
+def _window(df, event_col="event", **kw):
+    start, stop = event_window_exprs(
+        Window.partitionBy("grp"), "ord", event_col,
+        start_events=["handoff"], stop_events=["tackle"], **kw,
     )
-    got = {r["grp"]: (r["start_ord"], r["stop_ord"]) for r in win.collect()}
+    rows = df.select("grp", start.alias("start_ord"), stop.alias("stop_ord")).collect()
+    got = {}
+    for r in rows:  # every row of a group carries the group's window
+        assert got.setdefault(r["grp"], (r["start_ord"], r["stop_ord"])) == (
+            r["start_ord"], r["stop_ord"]
+        )
+    return got
+
+
+def test_event_window_with_fallback(spark):
+    got = _window(_df(spark), fallback_start_event="ball_snap")
     assert got == {"a": (3, 5), "b": (1, 3), "c": (None, None)}
 
 
 def test_event_window_no_fallback(spark):
-    win = event_window(
-        _df(spark), ["grp"], "ord", "event",
-        start_events=["handoff"], stop_events=["tackle"],
-    )
-    got = {r["grp"]: r["start_ord"] for r in win.collect()}
-    assert got["b"] is None  # b only has the fallback event
+    got = _window(_df(spark))
+    assert got["b"][0] is None  # b only has the fallback event
+
+
+def test_event_window_masked_event_sets_no_stop(spark):
+    """A Column event masked to NULL off the carrier rows: b's tackle sits on
+    a non-carrier row, so it must not set b's stop_ord."""
+    df = _df(spark).withColumn("carrier", ~((F.col("grp") == "b") & (F.col("ord") == 3)))
+    masked = F.when(F.col("carrier"), F.col("event"))
+    got = _window(df, masked, fallback_start_event="ball_snap")
+    assert got == {"a": (3, 5), "b": (1, None), "c": (None, None)}
 
 
 def test_first_crossing_strict_after(spark):
-    df = _df(spark).withColumn("start_ord", F.lit(3))
-    got = {
-        r["grp"]: r["crossing_ord"]
-        for r in first_crossing(
-            df, ["grp"], "ord", F.col("val") > 3.0, F.col("start_ord")
-        ).collect()
-    }
+    w = Window.partitionBy("grp")
+    rows = _df(spark).select(
+        "grp", first_crossing_expr(w, "ord", F.col("val") > 3.0, F.lit(3)).alias("c")
+    ).collect()
+    got = {r["grp"]: r["c"] for r in rows}
     # grp a: val>3 at ord 4(9.0),5(4.0),6(5.0) -> first after 3 is 4
     # grp b: val>3 at ord 2 only, not > start 3 -> NULL
     assert got == {"a": 4, "b": None, "c": None}
-
-
-def test_ordered_slice_python_semantics(spark):
-    df = _df(spark).withColumn("lo", F.lit(2)).withColumn("hi", F.lit(5))
-    got = sorted(
-        r["ord"] for r in ordered_slice(df, "ord", "lo", "hi").filter("grp='a'").collect()
-    )
-    assert got == [2, 3, 4]  # lo inclusive, hi exclusive
-
-
-def test_bounded_group_max_null_when_no_rows(spark):
-    df = (
-        _df(spark)
-        .withColumn("lo", F.when(F.col("grp") == "a", 2).otherwise(F.lit(None)))
-        .withColumn("hi", F.when(F.col("grp") == "a", 5).otherwise(F.lit(None)))
-    )
-    out = bounded_group_max(df, ["grp"], "ord", "lo", "hi", {"val": "max_val"})
-    got = {r["grp"]: r["max_val"] for r in out.collect()}
-    assert got == {"a": 9.0}  # groups with NULL bounds drop out (caller left-joins)
-
-
-def test_offset_from_first(spark):
-    out = offset_from_first(_df(spark), ["grp"], "ord", "val", "elapsed")
-    got = {(r["grp"], r["ord"]): r["elapsed"] for r in out.collect()}
-    assert got[("a", 1)] == 0.0
-    assert got[("a", 4)] == 8.0  # 9.0 - 1.0
-    assert got[("b", 3)] == 1.0  # 2.0 - 1.0
