@@ -89,7 +89,7 @@ def _max_params_over(
     """A1 over [idx_start, crossing) with NaN when never in vicinity
     (reference optimal_pursuit.py:222-236)."""
     idx_stop = _first_crossing(dist, idx_start)
-    if idx_stop is None or idx_stop <= idx_start:
+    if idx_stop is None:
         return float("nan"), float("nan")
     return float(np.max(v[idx_start:idx_stop])), float(np.max(a[idx_start:idx_stop]))
 
@@ -108,55 +108,80 @@ MAX_PARAMS_SCHEMA = T.StructType(
 )
 
 
+_FRAME_COLS = ("t", "event", "x", "y", "s", "a", "dir")
+_LIMIT_COLS = ("V_max_med", "V_max_max", "A_max_med", "A_max_max")
+
+
+def _decode(pdf: pd.DataFrame):
+    """Sort the group once by (nflId, frameId) and take each needed column to
+    numpy once, so every player's frames are one contiguous slice in frame
+    order. applyInPandas gives no row order inside a group; nothing after
+    this depends on it.
+
+    Returns ``(key, direction, col, carrier, tacklers)``: the (gameId,
+    playId) key, the play direction, the sorted frame columns, the carrier's
+    slice (empty when the carrier has no frames) and the tacklers in
+    ascending nflId as ``(nflId, name, position, limits, slice)``, dims read
+    from the first row of the slice; ``limits`` is None for a position
+    without limits (NULL limit columns)."""
+    nfl = pdf["nflId"].to_numpy()
+    order = np.lexsort((pdf["frameId"].to_numpy(), nfl))
+    col = {c: pdf[c].to_numpy()[order] for c in _FRAME_COLS}
+    ids, first, count = np.unique(nfl[order], return_index=True, return_counts=True)
+    span = {int(i): slice(f, f + n) for i, f, n in zip(ids, first, count)}
+    rows = order[first[np.isin(ids, nfl[pdf["is_tackler"].to_numpy(dtype=bool)])]]
+    dims = [pdf[c].to_numpy()[rows] for c in ("displayName", "position")]
+    limits = [pdf[c].to_numpy(dtype=float)[rows] for c in _LIMIT_COLS]
+    tacklers = [
+        (int(i), name, pos, None if np.isnan(lim[0]) else tuple(map(float, lim)), span[int(i)])
+        for i, name, pos, *lim in zip(nfl[rows], *dims, *limits)
+    ]
+    key = (int(pdf["gameId"].iloc[0]), int(pdf["playId"].iloc[0]))
+    carrier = span.get(int(pdf["ballCarrierId"].iloc[0]), slice(0, 0))
+    return key, str(pdf["playDirection"].iloc[0]), col, carrier, tacklers
+
+
+def _frame(key: tuple, rows: list, schema: T.StructType) -> pd.DataFrame:
+    """The kernel's result frame from ``(nflId, name, position, measures,
+    status)`` rows, NaN measures as NULL."""
+    return pd.DataFrame(
+        [
+            (*key, nfl, name, pos,
+             *(None if v is None or np.isnan(v) else float(v) for v in measures),
+             status)
+            for nfl, name, pos, measures, status in rows
+        ],
+        columns=[f.name for f in schema.fields],
+    )
+
+
 def max_params_play_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     """U3 UDF variant of the E1 max-params pipeline — the reference's
-    per-play loop body verbatim as a grouped-map kernel
-    (optimal_pursuit.py:193-259), kept ONLY for bit-parity testing against
-    the DataFrame-native plan (plans.domain.max_params_plan); the DF plan is
-    the production path (no Python in the hot loop).
-    Input columns match yap_play_kernel's."""
-    game_id = int(pdf["gameId"].iloc[0])
-    play_id = int(pdf["playId"].iloc[0])
-    carrier_id = int(pdf["ballCarrierId"].iloc[0])
-
-    carrier = pdf[pdf["nflId"] == carrier_id].sort_values("frameId")
-    x_c, y_c = carrier["x"].to_numpy(), carrier["y"].to_numpy()
-    if len(carrier):
-        idx_start, idx_stop = _identify_events(carrier["event"].to_numpy(dtype=object))
-    else:
-        idx_start = idx_stop = None
-
-    tacklers = (
-        pdf[pdf["is_tackler"]][["nflId", "displayName", "position"]]
-        .drop_duplicates("nflId")
-        .sort_values("nflId")
-    )
+    per-play loop body as a grouped-map kernel (optimal_pursuit.py:193-259).
+    The DataFrame-native plan (plans.domain.max_params_plan) is the
+    production E1 path; this kernel is its bit-parity twin in the tests,
+    builds the benchmark's expected E1 output and is timed by its kernel
+    probe. Input columns match yap_play_kernel's; a misaligned tackler gets
+    an error row and the others are still computed."""
+    key, _, col, c, tacklers = _decode(pdf)
+    x, y = col["x"], col["y"]
+    x_c, y_c = x[c], y[c]
+    idx_start, idx_stop = _identify_events(col["event"][c])
     out = []
-    for _, tk in tacklers.iterrows():
-        g = pdf[pdf["nflId"] == tk["nflId"]].sort_values("frameId")
-        status = None
-        if len(carrier) == 0:
+    for nfl, name, pos, _, g in tacklers:
+        measures = (None, None)
+        if len(x_c) == 0:
             status = "error_no_carrier_frames"
-        elif len(g) != len(carrier):
+        elif g.stop - g.start != len(x_c):
             status = "error_frame_misalignment"
         elif idx_start is None or idx_stop is None:
             status = "error_no_window"
-        if status is not None:
-            out.append((game_id, play_id, int(tk["nflId"]), tk["displayName"],
-                        tk["position"], None, None, status))
-            continue
-        dist = np.sqrt((x_c - g["x"].to_numpy()) ** 2 + (y_c - g["y"].to_numpy()) ** 2)
-        mv, ma = _max_params_over(
-            g["s"].to_numpy(), g["a"].to_numpy(), dist, idx_start
-        )
-        out.append((game_id, play_id, int(tk["nflId"]), tk["displayName"],
-                    tk["position"],
-                    None if np.isnan(mv) else mv,
-                    None if np.isnan(ma) else ma,
-                    "ok"))
-    return pd.DataFrame(
-        out, columns=[f.name for f in MAX_PARAMS_SCHEMA.fields]
-    )
+        else:
+            dist = np.sqrt((x_c - x[g]) ** 2 + (y_c - y[g]) ** 2)
+            measures = _max_params_over(col["s"][g], col["a"][g], dist, idx_start)
+            status = "ok"
+        out.append((nfl, name, pos, measures, status))
+    return _frame(key, out, MAX_PARAMS_SCHEMA)
 
 
 def yap_play_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -164,62 +189,28 @@ def yap_play_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     tackler out. Input columns: frameId, t, event, x, y, s, a, dir,
     playDirection, nflId, ballCarrierId, is_tackler, displayName, position,
     V_max_med, V_max_max, A_max_med, A_max_max (NULL limits = unknown pos).
+    A misaligned tackler turns the whole play into error rows.
     """
-    game_id = int(pdf["gameId"].iloc[0])
-    play_id = int(pdf["playId"].iloc[0])
-    carrier_id = int(pdf["ballCarrierId"].iloc[0])
-    play_direction = str(pdf["playDirection"].iloc[0])
-
-    out: list[dict] = []
-
-    def emit(nfl, name, pos, yap, mvo, mao, status):
-        out.append(
-            {
-                "game_ID": game_id, "play_ID": play_id, "NFL_ID": int(nfl),
-                "name": name, "position": pos,
-                "YAP": None if yap is None or (isinstance(yap, float) and np.isnan(yap)) else float(yap),
-                "max_vel_opt": None if mvo is None or (isinstance(mvo, float) and np.isnan(mvo)) else float(mvo),
-                "max_accel_opt": None if mao is None or (isinstance(mao, float) and np.isnan(mao)) else float(mao),
-                "status": status,
-            }
-        )
-
-    carrier = pdf[pdf["nflId"] == carrier_id].sort_values("frameId")
-    tacklers = (
-        pdf[pdf["is_tackler"]][["nflId", "displayName", "position",
-                                "V_max_med", "V_max_max", "A_max_med", "A_max_max"]]
-        .drop_duplicates("nflId")
-        .sort_values("nflId")
-    )
-    frames = {
-        int(nfl): pdf[pdf["nflId"] == nfl].sort_values("frameId")
-        for nfl in tacklers["nflId"]
-    }
+    key, direction, col, c, tacklers = _decode(pdf)
+    x_c, y_c = col["x"][c], col["y"][c]
+    idx_start, idx_stop = _identify_events(col["event"][c])
 
     # Malformed plays become error ROWS, never job failures: at ~12k plays a
     # single bad record must not kill the stage (the reference's blanket
     # try/except -> run_errors.csv, calculate_YAP.py:37-49, as data).
     bad = None
-    if len(carrier) == 0:
+    if len(x_c) == 0:
         bad = "error_no_carrier_frames"
-    elif any(len(g) != len(carrier) for g in frames.values()):
+    elif any(g.stop - g.start != len(x_c) for *_, g in tacklers):
         bad = "error_frame_misalignment"  # J4 positional assumption violated
+    elif idx_start is None or idx_stop is None:
+        bad = "error_no_window"
     if bad is not None:
-        for _, tk in tacklers.iterrows():
-            emit(tk["nflId"], tk["displayName"], tk["position"], None, None, None, bad)
-        return pd.DataFrame(out, columns=[f.name for f in YAP_RESULT_SCHEMA.fields])
+        rows = [(nfl, name, pos, (None,) * 3, bad) for nfl, name, pos, _, _ in tacklers]
+        return _frame(key, rows, YAP_RESULT_SCHEMA)
 
-    x_c = carrier["x"].to_numpy()
-    y_c = carrier["y"].to_numpy()
-    t = carrier["t"].to_numpy(dtype=float)
+    t = col["t"][c].astype(float)
     t = t - t[0]
-
-    idx_start, idx_stop = _identify_events(carrier["event"].to_numpy(dtype=object))
-    if idx_start is None or idx_stop is None:
-        for _, tk in tacklers.iterrows():
-            emit(tk["nflId"], tk["displayName"], tk["position"],
-                 None, None, None, "error_no_window")
-        return pd.DataFrame(out, columns=[f.name for f in YAP_RESULT_SCHEMA.fields])
     time_0 = t[idx_start]
 
     # The reference's position->limits if/elif has no else
@@ -239,58 +230,50 @@ def yap_play_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     #      limits are silently reused (stale variables) -> a computed row
     #      with the prior position's limits; flagged 'ok_stale_limits' so
     #      the divergence-prone reference behavior is visible as data.
+    out = []
     stale_limits: tuple | None = None
-    for _, tk in tacklers.iterrows():
-        g = frames[int(tk["nflId"])]
-        if pd.isna(tk["V_max_med"]):
+    for nfl, name, pos, limits, g in tacklers:
+        if limits is None:
             if stale_limits is None:
-                x_t, y_t = g["x"].to_numpy(), g["y"].to_numpy()
-                dist = np.sqrt((x_c - x_t) ** 2 + (y_c - y_t) ** 2)
+                dist = np.sqrt((x_c - col["x"][g]) ** 2 + (y_c - col["y"][g]) ** 2)
                 if _first_crossing(dist, idx_start) is not None:
                     # Case 1: the optimizer would consume unset limits.
-                    emit(tk["nflId"], tk["displayName"], tk["position"],
-                         None, None, None, "error_unknown_position")
+                    out.append((nfl, name, pos, (None,) * 3, "error_unknown_position"))
                     break
                 # Case 2: NaN path, limits untouched.
-                emit(tk["nflId"], tk["displayName"], tk["position"],
-                     None, None, None, "ok")
+                out.append((nfl, name, pos, (None,) * 3, "ok"))
                 continue
             limits = stale_limits  # case 3
             status = "ok_stale_limits"
         else:
-            limits = (
-                float(tk["V_max_med"]), float(tk["V_max_max"]),
-                float(tk["A_max_med"]), float(tk["A_max_max"]),
-            )
             stale_limits = limits
             status = "ok"
 
         try:
-            yap, mvo, mao = _search_tackler(
-                limits, g, x_c, y_c, t, time_0, idx_start, play_direction,
+            measures = _search_tackler(
+                limits, col["x"][g], col["y"][g], col["s"][g], col["a"][g],
+                col["dir"][g], x_c, y_c, t, time_0, idx_start, direction,
             )
         except Exception:
             # Reference semantics: an exception aborts the PLAY (earlier
             # tacklers' rows were already saved); surfaced as data here.
-            emit(tk["nflId"], tk["displayName"], tk["position"],
-                 None, None, None, "error_kernel")
+            out.append((nfl, name, pos, (None,) * 3, "error_kernel"))
             break
+        out.append((nfl, name, pos, measures, status))
 
-        emit(tk["nflId"], tk["displayName"], tk["position"],
-             yap, mvo, mao, status)
-
-    return pd.DataFrame(out, columns=[f.name for f in YAP_RESULT_SCHEMA.fields])
+    return _frame(key, out, YAP_RESULT_SCHEMA)
 
 
-def _search_tackler(limits, g, x_c, y_c, t, time_0, idx_start, play_direction):
+def _search_tackler(
+    limits, x_t, y_t, v_t, a_t, dir_t, x_c, y_c, t, time_0, idx_start, play_direction
+):
     """The per-tackler candidate-frame search (reference
     optimal_pursuit.py:479-561), split out so exceptions map to error rows.
     ``limits`` is the (V_max_med, V_max_max, A_max_med, A_max_max) tuple in
     effect for this tackler — its own position's, or the previous tackler's
-    when the reference would reuse stale variables."""
-    x_t, y_t = g["x"].to_numpy(), g["y"].to_numpy()
-    v_t, a_t = g["s"].to_numpy(), g["a"].to_numpy()
-    u_t, w_t = _uv(v_t, g["dir"].to_numpy())
+    when the reference would reuse stale variables. The tackler's frame
+    arrays (x, y, speed, acceleration, direction) align with the carrier's."""
+    u_t, w_t = _uv(v_t, dir_t)
     dist = np.sqrt((x_c - x_t) ** 2 + (y_c - y_t) ** 2)
 
     yap = float("nan")

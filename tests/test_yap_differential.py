@@ -296,7 +296,8 @@ def test_kernel_matches_reference_numerics_on_synthetic_season():
             # ...tied to the SHIPPED kernel entry point: _search_tackler
             # must emit exactly what the kernel-solver loop derives.
             got_yap, got_mvo, got_mao = _search_tackler(
-                limits, g, x_c, y_c, t, time_0, idx_start, direction
+                limits, *(g[c].to_numpy() for c in ("x", "y", "s", "a", "dir")),
+                x_c, y_c, t, time_0, idx_start, direction,
             )
             checked += 1
             if ker_j is None:

@@ -10,7 +10,7 @@ import pytest
 
 from nfl_big_data_bowl_2024_spark import fixtures, schemas
 from nfl_big_data_bowl_2024_spark.kernels.lqr import RiccatiSweep
-from nfl_big_data_bowl_2024_spark.kernels.yap import yap_play_kernel
+from nfl_big_data_bowl_2024_spark.kernels.yap import max_params_play_kernel, yap_play_kernel
 
 LIMITS = {p: lims for p, *lims in schemas.POSITION_LIMITS}
 
@@ -86,6 +86,16 @@ def test_shared_sweep_kernel_bit_identical_to_fresh_sweeps(monkeypatch):
     assert len(shared) == len(fresh)
     for i, (a, b) in enumerate(zip(shared, fresh)):
         assert a.equals(b), i
+
+
+def test_kernels_ignore_row_order_within_group():
+    """applyInPandas gives no row order inside a group: both kernels must
+    return the same frame for any permutation of a group's rows."""
+    rng = np.random.default_rng(0)
+    for i, g in enumerate(_season_groups()):
+        shuffled = g.iloc[rng.permutation(len(g))]
+        for kernel in (max_params_play_kernel, yap_play_kernel):
+            assert kernel(shuffled).equals(kernel(g)), (i, kernel.__name__)
 
 
 def test_left_play_mirror_same_yap():
@@ -256,8 +266,6 @@ def test_frame_misalignment_is_error_row_not_crash():
 
 
 def test_max_params_kernel_guards_too():
-    from nfl_big_data_bowl_2024_spark.kernels.yap import max_params_play_kernel
-
     out = max_params_play_kernel(_mangle(_group(1, 101), drop_carrier=True))
     assert (out["status"] == "error_no_carrier_frames").all()
     out2 = max_params_play_kernel(_mangle(_group(1, 101), drop_tackler_frames=True))
